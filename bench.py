@@ -398,6 +398,11 @@ LOCKIN = ITERATIVE | {
 DETAIL_PATH = os.environ.get("SPARK_GRAFT_BENCH_DETAIL", "BENCH_detail.json")
 
 
+def _short(name: str) -> str:
+    """Stdout-line id: the registry name's prefix sans 'q' ("104")."""
+    return name.split("_", 1)[0].removeprefix("q")
+
+
 def main() -> None:
     from streaming_recommendation_spark.queries import queries
     from streaming_recommendation_spark.session import get_spark
@@ -410,7 +415,8 @@ def main() -> None:
     qs = queries()
     timings: dict[str, float] = {}
     # fail fast on a short-id collision BEFORE burning the ~100 s run
-    shorts = {n.split("_", 1)[0] for n in HEADLINE}
+    assert all(n.startswith("q") for n in HEADLINE), "query names start with 'q'"
+    shorts = {_short(n) for n in HEADLINE}
     assert len(shorts) == len(HEADLINE), "short query ids must be unique"
     ordered = [n for n in HEADLINE if n in LOCKIN] + [
         n for n in HEADLINE if n not in LOCKIN
@@ -465,11 +471,8 @@ def main() -> None:
     # old numbers remain available verbatim. The cheapest-row
     # eviction loop stays as a safety net only (queries_omitted
     # reports it; 0 expected).
-    lock_short = {n.split("_", 1)[0][1:] for n in HEADLINE if n in LOCKIN}
-    qmap = {
-        n.split("_", 1)[0][1:]: int(round(t * 100))
-        for n, t in timings.items()
-    }
+    lock_short = {_short(n) for n in HEADLINE if n in LOCKIN}
+    qmap = {_short(n): int(round(t * 100)) for n, t in timings.items()}
     assert len(qmap) == len(timings), "short ids must stay unique sans 'q'"
     droppable = sorted(
         (q for q in qmap if q not in lock_short), key=lambda q: (qmap[q], q)

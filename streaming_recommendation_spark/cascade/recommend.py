@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot
+from ..operators.similarity import mean_pool_grouped
 from ..operators.topk import top_k_per_group
 
 
@@ -228,18 +229,9 @@ def recommend(
 
     # History mean-pool for the rank stub (A7): mean of history item
     # vectors per user; users with no history get a zero vector.
-    hist_vecs = (
-        history.join(F.broadcast(items), "item_id")
-        .select("user_id", F.posexplode("item_vec").alias("dim", "v"))
-        .groupBy("user_id", "dim")
-        .agg(F.avg("v").alias("v"))
-        .groupBy("user_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "v"))), lambda s: s["v"]
-            ).alias("history_vec")
-        )
-    )
+    hist_vecs = mean_pool_grouped(
+        history.join(F.broadcast(items), "item_id"), "user_id", "item_vec"
+    ).withColumnRenamed("mean_vec", "history_vec")
 
     # M3 rank: candidate vs history context, keep k_rank.
     with_feats = (

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import checkpoint_partitioned, round_width
+from ..plans.audit import checkpoint_partitioned, frame_bytes, round_width
 from .dedup import normalize_text, spread
 
 
@@ -213,13 +213,12 @@ def learn_bpe(
     # (corpus-scan-priced) first materialization makes every
     # subsequent round job frame-sized; at production width the
     # round_width cap makes this a no-op.
-    wf, wf_bytes = checkpoint_partitioned(
+    wf = checkpoint_partitioned(
         word_frequency_table(df, text_col, repartition).withColumn(
             "__seg", _init_seg(F.col("__word"))
-        ),
-        return_bytes=True,
+        )
     )
-    w = round_width(wf_bytes, df.sparkSession)
+    w = round_width(frame_bytes(wf), df.sparkSession)
     if w is not None:
         wf = wf.coalesce(w)  # narrow relayout: no shuffle, no-op if w >= width
     if stats is not None:

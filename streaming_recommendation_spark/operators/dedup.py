@@ -32,11 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import det_hash_str
-from ..plans.audit import (
-    checkpoint_partitioned,
-    local_checkpoint_measured,
-    round_width,
-)
+from ..plans.audit import checkpoint_partitioned, frame_bytes, round_width
 
 # Carter-Wegman family g_i(h) = (a_i*h + b_i) mod P over the Mersenne
 # prime P = 2^31-1, with the shingle hash h restricted to 28 bits
@@ -507,9 +503,9 @@ def connected_components(
     # sym below each materialize separately, and without this both
     # would re-run the whole upstream candidate-pair pipeline (plans
     # are trees; exchange reuse does not cross separate executions)
-    raw, raw_bytes = local_checkpoint_measured(
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-    )
+    raw = edges.select(
+        F.col(src).alias("node"), F.col(dst).alias("nbr")
+    ).localCheckpoint()
     base = raw.union(
         raw.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
     )
@@ -525,13 +521,12 @@ def connected_components(
     # (labels by nbr — the static sym side reuses its checkpointed
     # layout — and the message groupBy) + the count.
     # OPTIMIZATION_r13 (VERDICT r12 #1): the static edge side's width
-    # derives from the measured raw-pair bytes (sym ~ 3x raw: both
+    # derives from the checkpointed raw-pair bytes (sym ~ 3x raw: both
     # directions + self-loops), not from the core count — every
     # round's message join inherits this layout, so for the KB-scale
     # dedup graphs the rounds stop scheduling core-count-wide stages;
     # round_width's shuffle.partitions cap keeps 100 TB behavior.
-    w = round_width(None if raw_bytes is None else 3 * raw_bytes,
-                    edges.sparkSession)
+    w = round_width(3 * frame_bytes(raw), edges.sparkSession)
     sym = checkpoint_partitioned(
         base.union(
             labels.select("node", F.col("node").alias("nbr"))
@@ -640,9 +635,7 @@ def connected_components_star(
         .localCheckpoint()
     )
     # Parent-edge multiset, kept as distinct (u, v) pairs with u != v.
-    cur, cur_bytes = local_checkpoint_measured(
-        raw.where(F.col("u") != F.col("v")).distinct()
-    )
+    cur = raw.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     rounds = 0
     cur_count = cur.count()
     converged = cur_count == 0
@@ -723,13 +716,13 @@ def connected_components_star(
             .groupBy("v")
             .agg(F.min("w").alias("w"))
         )
-        small, sb = local_checkpoint_measured(
+        small = (
             small.join(parents, "v", "left")
             .select("u", F.coalesce("w", "v").alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct()
+            .localCheckpoint()
         )
-        cur_bytes = sb if sb is not None else cur_bytes
         # converged when the round was a no-op (star edges reproduce
         # themselves through both half-steps); cur's count is carried
         # from the previous round — no job re-launch

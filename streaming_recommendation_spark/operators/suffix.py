@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import checkpoint_partitioned, round_width
+from ..plans.audit import checkpoint_partitioned, frame_bytes, round_width
 from .dedup import normalize_text, span_coverage, spread
 
 
@@ -86,27 +86,20 @@ def token_rank_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     repartition: int | bool | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(id, pos, r): rank of each token occurrence (equality <=> same
-    token), position 0-based within its (normalized) document.
-    ``stats`` (optional) records the materialized token-table bytes
-    as ``toks_bytes`` so callers can size downstream round layouts
-    (OPTIMIZATION_r13 — see plans.audit.round_width). The rank column
-    ``r`` is a min-occurrence struct(__ri, __rp) REPRESENTATIVE, not a
-    dense integer: downstream consumers may only compare it for
-    EQUALITY (the dict_encode dense-rank contract was retired in
-    OPTIMIZATION_r12; use dict_encode directly if you need dense
-    integer ids)."""
+    token), position 0-based within its (normalized) document. The
+    rank column ``r`` is a min-occurrence struct(__ri, __rp)
+    REPRESENTATIVE, not a dense integer: downstream consumers may only
+    compare it for EQUALITY (the dict_encode dense-rank contract was
+    retired in OPTIMIZATION_r12; use dict_encode directly if you need
+    dense integer ids)."""
     words = F.split(normalize_text(F.col(text_col)), " ")
-    toks, nbytes = checkpoint_partitioned(
+    toks = checkpoint_partitioned(
         spread(df, repartition)
         .select(F.col(id_col), F.posexplode(words).alias("pos", "__tok"))
-        .repartition("__tok"),
-        return_bytes=True,
+        .repartition("__tok")
     )
-    if stats is not None:
-        stats["toks_bytes"] = nbytes
     vocab = _rep_rank(toks, "__tok", id_col, "r")
     return toks.join(vocab, "__tok").select(id_col, "pos", "r")
 
@@ -131,7 +124,6 @@ def prefix_doubling_ranks(
     prune_unique: bool = False,
     materialize_input: bool = True,
     return_rounds: bool = False,
-    frame_bytes: int | None = None,
 ) -> DataFrame | list[DataFrame]:
     """Iterate rank doubling: after ``rounds`` rounds, ``r`` is the
     rank of the 2^rounds-token block starting at each position — rank
@@ -169,20 +161,18 @@ def prefix_doubling_ranks(
 
     Round layouts are sized to the FRAME, not the core count
     (OPTIMIZATION_r13, VERDICT r12 #1): each round's checkpoints are
-    ``round_width(bytes of the previous round's materialized ranks)``
-    partitions wide — capped at spark.sql.shuffle.partitions (the
-    100 TB behavior is unchanged), floored at 1 so the shrinking
-    survivor tables of pruned mode stop paying core-count-wide
-    scheduling per job. ``frame_bytes`` seeds the estimate when the
-    caller materialized the input itself."""
+    ``round_width(frame_bytes(previous round's ranks))`` partitions
+    wide — capped at spark.sql.shuffle.partitions (the 100 TB
+    behavior is unchanged), floored at 1 so the shrinking survivor
+    tables of pruned mode stop paying core-count-wide scheduling per
+    job. With ``materialize_input=False`` the caller's own checkpoint
+    of the input seeds round 1."""
     sess = ranks.sparkSession
     if materialize_input:
-        ranks, frame_bytes = checkpoint_partitioned(
-            ranks.repartition(id_col, "pos"), return_bytes=True
-        )
+        ranks = checkpoint_partitioned(ranks.repartition(id_col, "pos"))
     round_tables: list[DataFrame] = []
     for k in range(rounds):
-        w = round_width(frame_bytes, sess)
+        w = round_width(frame_bytes(ranks), sess)
         joined = _rank_at_offset(ranks, id_col, 1 << k)
         if prune_unique:
             joined = joined.where(F.col("__r2").isNotNull())
@@ -203,12 +193,11 @@ def prefix_doubling_ranks(
             paired, "__key", id_col, "__nr",
             min_count=2 if prune_unique else 1,
         )
-        ranks, frame_bytes = checkpoint_partitioned(
+        ranks = checkpoint_partitioned(
             paired.join(vocab, "__key").select(
                 id_col, "pos", F.col("__nr").alias("r")
             ).repartition(id_col, "pos"),
             width=w,
-            return_bytes=True,
         )
         if return_rounds:
             round_tables.append(ranks)
@@ -242,16 +231,14 @@ def exact_substring_duplicates(
     # (id, pos); every doc's token count falls out of it (positions are
     # dense, split() yields >= 1 token for any text), so no second
     # scan/explode is needed for the per-doc base stats
-    r0, r0_bytes = checkpoint_partitioned(
+    r0 = checkpoint_partitioned(
         token_rank_table(df, text_col, id_col, repartition=repartition)
-        .repartition(id_col, "pos"),
-        return_bytes=True,
+        .repartition(id_col, "pos")
     )
     base = r0.groupBy(id_col).agg((F.max("pos") + 1).alias("n_tokens"))
 
     ranks = prefix_doubling_ranks(
-        r0, base_rounds, id_col, prune_unique=True,
-        materialize_input=False, frame_bytes=r0_bytes,
+        r0, base_rounds, id_col, prune_unique=True, materialize_input=False
     )
     # substring-of-length-min_len key: block ranks at pos and at
     # pos + min_len - block (overlapping windows cover exactly
@@ -313,16 +300,14 @@ def dup_length_profile(
     if max_len < 2 or max_len & (max_len - 1):
         raise ValueError("max_len must be a power of two >= 2")
     rounds = max_len.bit_length() - 1
-    r0, r0_bytes = checkpoint_partitioned(
+    r0 = checkpoint_partitioned(
         token_rank_table(df, text_col, id_col, repartition=repartition)
-        .repartition(id_col, "pos"),
-        return_bytes=True,
+        .repartition(id_col, "pos")
     )
     out = r0.groupBy(id_col).agg((F.max("pos") + 1).alias("n_tokens"))
     tables = prefix_doubling_ranks(
         r0, rounds, id_col,
         prune_unique=True, materialize_input=False, return_rounds=True,
-        frame_bytes=r0_bytes,
     )
     for k, t in enumerate(tables, start=1):
         col = f"dup_at_{1 << k}"

@@ -83,26 +83,22 @@ ROUND_TARGET_BYTES = int(
 )
 
 
-def _persisted_ids(sess) -> set[int]:
-    jsc = sess.sparkContext._jsc.sc()
-    return {info.id() for info in jsc.getRDDStorageInfo()}
-
-
-def _new_persisted_bytes(sess, before: set[int]) -> int | None:
-    """Bytes of the RDD persisted since ``before`` was captured —
-    driver-side block-manager metadata, NO job. When the measured
-    action also materialized upstream lazy persists, the checkpoint
-    RDD is the one created LAST (highest id). Returns None when no
-    new persisted entry is visible (e.g. an empty frame — the block
-    manager only lists RDDs with cached bytes)."""
-    jsc = sess.sparkContext._jsc.sc()
-    fresh = [
-        info for info in jsc.getRDDStorageInfo() if info.id() not in before
-    ]
-    if not fresh:
+def frame_bytes(df) -> int | None:
+    """Bytes the block manager holds for ``df``'s OWN checkpoint RDD
+    (the ``LogicalRDD`` a ``localCheckpoint`` leaves as the plan) —
+    driver-side storage metadata, NO job. 0 when the checkpoint holds
+    no blocks (an empty frame with no partitions: the block manager
+    lists only RDDs that hold bytes); None when ``df`` is not a
+    checkpoint."""
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
         return None
-    newest = max(fresh, key=lambda info: info.id())
-    return int(newest.memSize() + newest.diskSize())
+    rdd_id = plan.rdd().id()
+    jsc = df.sparkSession.sparkContext._jsc.sc()
+    for info in jsc.getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return 0
 
 
 def round_width(nbytes: int | None, sess, target_bytes: int | None = None):
@@ -121,8 +117,7 @@ def round_width(nbytes: int | None, sess, target_bytes: int | None = None):
     return max(1, min(cap, (int(nbytes) + target - 1) // target))
 
 
-def checkpoint_partitioned(df, width: int | None = None,
-                           return_bytes: bool = False):
+def checkpoint_partitioned(df, width: int | None = None):
     """``localCheckpoint`` that KEEPS the DataFrame's hash
     partitioning. Under AQE, ``Dataset.checkpoint`` records
     ``UnknownPartitioning`` (the adaptive plan can still re-coalesce,
@@ -141,18 +136,19 @@ def checkpoint_partitioned(df, width: int | None = None,
     ``repartition("key")`` (and any exchange inside the checkpointed
     subplan) lays the frame out ``width`` wide instead of the session
     default. Iterative operators derive it from the previous round's
-    measured bytes via ``round_width`` — see ROUND_TARGET_BYTES.
+    checkpoint via ``round_width(frame_bytes(prev), sess)`` — see
+    ROUND_TARGET_BYTES.
 
-    ``return_bytes=True`` additionally returns the materialized size
-    in bytes (block-manager metadata, no job) as ``(df, nbytes)``;
-    nbytes is None when not visible (empty frame).
-
-    Caveat: the AQE flag is session-global, so a query PLANNED by a
-    concurrent thread/stream during the (brief, eager) materialization
-    would also skip AQE. The engine's operators run checkpoints
-    sequentially on the driver thread; if you embed them under a
-    multi-threaded scheduler, serialize calls or use a separate
-    SparkSession (newSession()) per thread.
+    Caveat: for the (brief, eager) materialization this flips TWO
+    session-global confs — ``spark.sql.adaptive.enabled`` (off) and,
+    when ``width`` is given, ``spark.sql.shuffle.partitions`` — and
+    restores both afterwards. A query PLANNED by a concurrent
+    thread/stream in that window would see them too (no AQE, the
+    round's width). It is safe only while a single thread plans on
+    the session: the engine's operators run checkpoints sequentially
+    on the driver thread; if you embed them under a multi-threaded
+    scheduler, serialize calls or use a separate SparkSession
+    (newSession()) per thread.
     """
     sess = df.sparkSession
     old = sess.conf.get("spark.sql.adaptive.enabled")
@@ -160,23 +156,19 @@ def checkpoint_partitioned(df, width: int | None = None,
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     if width is not None:
         sess.conf.set("spark.sql.shuffle.partitions", str(int(width)))
-    before = _persisted_ids(sess) if return_bytes else None
     try:
-        out = df.localCheckpoint()
+        return df.localCheckpoint()
     finally:
         sess.conf.set("spark.sql.adaptive.enabled", old)
         sess.conf.set("spark.sql.shuffle.partitions", old_sp)
-    if return_bytes:
-        return out, _new_persisted_bytes(sess, before)
-    return out
 
 
-def narrow_static_layout(df, nbytes: int | None, *keys: str):
+def narrow_static_layout(df, *keys: str):
     """Re-layout an ALREADY-MATERIALIZED static loop side (edge
     list, adjacency) to a frame-sized width — but only when the
-    measured frame is small enough that the relayout is provably
-    cheap AND the width drastically shrinks (<= a quarter of the
-    session default). Iterative operators call this right after the
+    checkpoint (``frame_bytes``) is small enough that the relayout is
+    provably cheap AND the width drastically shrinks (<= a quarter of
+    the session default). Iterative operators call this right after the
     static side's first checkpoint: at 100 TB the frame is large, the
     condition never fires, and the cost is exactly one materialized
     checkpoint as before; at small scale the (bounded, <=
@@ -187,20 +179,8 @@ def narrow_static_layout(df, nbytes: int | None, *keys: str):
     on q102's 100 MB edge side — 32 -> 12 partitions was a wash).
     Returns the input unchanged when the condition does not fire."""
     sess = df.sparkSession
-    w = round_width(nbytes, sess)
+    w = round_width(frame_bytes(df), sess)
     default = int(sess.conf.get("spark.sql.shuffle.partitions"))
     if w is None or 4 * w > default:
         return df
     return checkpoint_partitioned(df.repartition(w, *keys), width=w)
-
-
-def local_checkpoint_measured(df):
-    """Plain (AQE-on) ``localCheckpoint`` that also reports the
-    materialized bytes — ``(df, nbytes | None)``. Same block-manager
-    read as ``checkpoint_partitioned(return_bytes=True)``; used by
-    iterative operators to size the NEXT round's layout from the
-    frame they just materialized."""
-    sess = df.sparkSession
-    before = _persisted_ids(sess)
-    out = df.localCheckpoint()
-    return out, _new_persisted_bytes(sess, before)

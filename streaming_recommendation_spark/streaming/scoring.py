@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cascade import CascadeConfig, recommend
+from ..operators.similarity import mean_pool_grouped
 from .pipeline import parse_profile_stream
 from .sink import foreach_batch_writer
 
@@ -53,19 +54,10 @@ def score_batch(
         F.broadcast(items.withColumn("item_key", F.col("item_id").cast("string"))),
         "item_key",
     )
-    user_vecs = (
-        with_vecs.select("__version", F.posexplode("item_vec").alias("dim", "v"))
-        .groupBy("__version", "dim")
-        .agg(F.avg("v").alias("v"))
-        .groupBy("__version")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "v"))), lambda s: s["v"]
-            ).alias("user_vec")
-        )
-    )
     history = with_vecs.select(F.col("__version").alias("user_id"), "item_id")
-    users = user_vecs.select(F.col("__version").alias("user_id"), "user_vec")
+    users = mean_pool_grouped(with_vecs, "__version", "item_vec").select(
+        F.col("__version").alias("user_id"), F.col("mean_vec").alias("user_vec")
+    )
     recs = recommend(users, items, history, config or CascadeConfig())
     per_version = recs.groupBy("user_id").agg(
         F.transform(

@@ -1,6 +1,6 @@
 """OPTIMIZATION_r13 focused tests: frame-sized iterative round
-layouts (VERDICT r12 #1 — width from measured bytes, never the core
-count) and the measurement plumbing they ride on.
+layouts (VERDICT r12 #1 — width from the previous checkpoint's bytes,
+never the core count) and the ``frame_bytes`` lookup they ride on.
 
 The VALUE semantics of every touched operator are pinned elsewhere
 (test_suffix / test_bpe / test_graph / test_dedup brute-force parity
@@ -20,7 +20,7 @@ audit_mod = importlib.import_module(
 )
 from streaming_recommendation_spark.plans.audit import (  # noqa: E402
     checkpoint_partitioned,
-    local_checkpoint_measured,
+    frame_bytes,
     narrow_static_layout,
     round_width,
 )
@@ -44,11 +44,8 @@ def test_checkpoint_width_honored_and_conf_restored(spark):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     sp = spark.conf.get("spark.sql.shuffle.partitions")
     df = spark.range(1000).selectExpr("id", "id % 7 as k")
-    out, nbytes = checkpoint_partitioned(
-        df.repartition("k"), width=3, return_bytes=True
-    )
+    out = checkpoint_partitioned(df.repartition("k"), width=3)
     assert out.rdd.getNumPartitions() == 3
-    assert nbytes is not None and nbytes > 0
     # session conf untouched after the materialization
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == sp
@@ -56,26 +53,36 @@ def test_checkpoint_width_honored_and_conf_restored(spark):
     assert out.orderBy("id").collect() == df.orderBy("id").collect()
 
 
-def test_narrow_static_layout_fires_only_when_small(spark):
+def test_narrow_static_layout_fires_only_when_small(spark, monkeypatch):
     df = spark.range(2000).selectExpr("id", "id % 13 as k")
-    ck, nbytes = checkpoint_partitioned(
-        df.repartition("k"), return_bytes=True
-    )
+    ck = checkpoint_partitioned(df.repartition("k"))
     # tiny frame: re-layout to round_width partitions
-    narrowed = narrow_static_layout(ck, nbytes, "k")
-    assert narrowed.rdd.getNumPartitions() == round_width(nbytes, spark)
+    narrowed = narrow_static_layout(ck, "k")
+    assert narrowed.rdd.getNumPartitions() == round_width(
+        frame_bytes(ck), spark
+    )
     # "large" frame (bytes >> target): must return the input UNCHANGED
     # — at 100 TB the relayout never runs
-    assert narrow_static_layout(ck, 10**15, "k") is ck
-    # unknown bytes: unchanged
-    assert narrow_static_layout(ck, None, "k") is ck
+    with monkeypatch.context() as m:
+        m.setattr(audit_mod, "ROUND_TARGET_BYTES", 1)
+        assert narrow_static_layout(ck, "k") is ck
+    # not a checkpoint (bytes unknown): unchanged
+    lazy = ck.where("k > 0")
+    assert narrow_static_layout(lazy, "k") is lazy
 
 
-def test_local_checkpoint_measured_reports_bytes(spark):
+def test_frame_bytes_reads_the_checkpoint_itself(spark):
     df = spark.range(5000).selectExpr("id * 2 as v")
-    out, nbytes = local_checkpoint_measured(df)
-    assert nbytes is not None and nbytes > 0
-    assert out.count() == 5000
+    # plain (AQE-on) and AQE-off partitioned checkpoints both resolve
+    # to their own RDD's blocks
+    assert frame_bytes(df.localCheckpoint()) > 0
+    assert frame_bytes(checkpoint_partitioned(df.repartition("v"))) > 0
+    # an empty checkpoint (no partitions) holds no blocks, so the block
+    # manager does not list it -> 0, not None
+    assert frame_bytes(df.limit(0).localCheckpoint()) == 0
+    # a lazy frame, or a plan ON TOP of a checkpoint, is not a checkpoint
+    assert frame_bytes(df) is None
+    assert frame_bytes(df.localCheckpoint().where("v > 0")) is None
 
 
 def test_prefix_doubling_layout_invariant(spark, monkeypatch):
